@@ -15,10 +15,11 @@ determinism rules (same contract as textops.py):
   * hashes are md5-hex prefixes → BIGINT (conv ≡ '0x'||substr cast);
   * regexes use the Java∩RE2 common subset (no backrefs/lookaround).
 
-Scale notes (100 TB): PII/quality/sampling are pure per-row column
-projections — no shuffle, full codegen (quality's gram-counting hot
-path is a numpy/Counter mapInPandas kernel; the Column-expression
-build remains as the bit-exact oracle twin, the simhash_df pattern).
+Scale notes (100 TB): PII/quality/sampling are per-row — no shuffle.
+PII and sampling are column projections with full codegen; the
+repetition filter's gram counting and boilerplate removal's
+segmentation are Counter/str-split mapInPandas kernels, each pinned
+to its DuckDB twin in tests/test_corpusops.py (the simhash_df pattern).
 Boilerplate removal shuffles once on the segment key (map-side
 partial agg; the ≥min_docs filter keeps the boilerplate side small)
 and once on doc_id to reassemble. TF-IDF shuffles on term then
@@ -125,17 +126,6 @@ REP_DUP2_MAX = 0.03  # keep if duplicate-2gram fraction <= this
 REP_TOP2_MAX = 0.05  # and top-2gram fraction <= this
 
 
-def _grams_col(toks: Column, n: int) -> Column:
-    """All consecutive word n-grams (NOT distinct — counts matter);
-    a doc shorter than n words is its own single gram."""
-    whole = F.array(F.concat_ws(" ", toks))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - n + 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(whole)
-
-
 def _grams_sql(w: str, n: int) -> str:
     return (
         f"CASE WHEN len({w}) >= {n} "
@@ -153,73 +143,52 @@ def repetition_quality_df(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "pandas",
 ) -> DataFrame:
     """Per-doc repetition signals: counts of total/distinct 2- and
     3-grams, the top-2gram multiplicity, the derived duplicate/top
     fractions (6dp), and the composite keep flag — the Gopher-style
     repetition filter of a training-corpus pipeline.
 
-    ``impl='pandas'`` (default) counts grams with a Counter per Arrow
-    batch — the distinct×total quadratic count via interpreted
-    ``F.filter`` lambdas is the textops simhash disease. All counts
-    are exact ints and the fractions divide the same ints, so the
-    result is IDENTICAL to ``impl='expr'`` (the Column build mirroring
-    the DuckDB twin); tests/test_corpusops.py asserts equality."""
+    Grams are counted with a Counter per Arrow batch — a distinct×total
+    count via interpreted ``F.filter`` lambdas is the textops simhash
+    disease. All counts are exact ints and the fractions divide the
+    same ints, so the result equals the DuckDB twin
+    ``repetition_quality_sql`` (tests/test_corpusops.py). NULL text
+    counts like empty text: one empty gram per n."""
+    from collections import Counter
+
     toks = tokens_col(F.col(text_col))
     base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
 
-    if impl == "pandas":
-        from collections import Counter
+    def batches(it):
+        for pdf in it:
+            out = {
+                "doc_id": pdf["doc_id"],
+                "n_2grams": [], "n_distinct_2grams": [], "top_2gram_count": [],
+                "n_3grams": [], "n_distinct_3grams": [],
+            }
+            for tk in pdf["toks"]:
+                tk = list(tk) if tk is not None else []
+                for n, (tot_k, dis_k, top_k) in (
+                    (2, ("n_2grams", "n_distinct_2grams", "top_2gram_count")),
+                    (3, ("n_3grams", "n_distinct_3grams", None)),
+                ):
+                    if len(tk) >= n:
+                        g = [" ".join(tk[i : i + n]) for i in range(len(tk) - n + 1)]
+                    else:
+                        g = [" ".join(tk)]
+                    c = Counter(g)
+                    out[tot_k].append(len(g))
+                    out[dis_k].append(len(c))
+                    if top_k:
+                        out[top_k].append(max(c.values()))
+            yield pd.DataFrame(out)
 
-        def batches(it):
-            for pdf in it:
-                out = {
-                    "doc_id": pdf["doc_id"],
-                    "n_2grams": [], "n_distinct_2grams": [], "top_2gram_count": [],
-                    "n_3grams": [], "n_distinct_3grams": [],
-                }
-                for tk in pdf["toks"]:
-                    # NULL toks (NULL text): the expr twin's size(NULL)>=n
-                    # predicate is NULL → falsy → the `whole` branch
-                    # concat_ws(NULL) = "" — i.e. identical to empty toks
-                    tk = list(tk) if tk is not None else []
-                    for n, (tot_k, dis_k, top_k) in (
-                        (2, ("n_2grams", "n_distinct_2grams", "top_2gram_count")),
-                        (3, ("n_3grams", "n_distinct_3grams", None)),
-                    ):
-                        if len(tk) >= n:
-                            g = [" ".join(tk[i : i + n]) for i in range(len(tk) - n + 1)]
-                        else:
-                            g = [" ".join(tk)]
-                        c = Counter(g)
-                        out[tot_k].append(len(g))
-                        out[dis_k].append(len(c))
-                        if top_k:
-                            out[top_k].append(max(c.values()))
-                yield pd.DataFrame(out)
-
-        counted = base.mapInPandas(
-            batches,
-            "doc_id bigint, n_2grams bigint, n_distinct_2grams bigint, "
-            "top_2gram_count bigint, n_3grams bigint, n_distinct_3grams bigint",
-        )
-    else:
-        g2, g3 = _grams_col(F.col("toks"), 2), _grams_col(F.col("toks"), 3)
-        top2 = F.array_max(
-            F.transform(
-                F.array_distinct(g2),
-                lambda d: F.size(F.filter(g2, lambda x: x == d)),
-            )
-        )
-        counted = base.select(
-            "doc_id",
-            F.size(g2).cast("bigint").alias("n_2grams"),
-            F.size(F.array_distinct(g2)).cast("bigint").alias("n_distinct_2grams"),
-            top2.cast("bigint").alias("top_2gram_count"),
-            F.size(g3).cast("bigint").alias("n_3grams"),
-            F.size(F.array_distinct(g3)).cast("bigint").alias("n_distinct_3grams"),
-        )
+    counted = base.mapInPandas(
+        batches,
+        "doc_id bigint, n_2grams bigint, n_distinct_2grams bigint, "
+        "top_2gram_count bigint, n_3grams bigint, n_distinct_3grams bigint",
+    )
 
     dup2 = _rep_frac(F.col("n_2grams") - F.col("n_distinct_2grams"), F.col("n_2grams"))
     top2f = _rep_frac(F.col("top_2gram_count"), F.col("n_2grams"))
@@ -265,16 +234,6 @@ SEG_N = 3  # tokens per (non-overlapping) segment
 BOILER_MIN_DOCS = 3
 
 
-def segments_col(toks: Column, n: int = SEG_N) -> Column:
-    """Non-overlapping n-token chunks, in order; the final chunk keeps
-    the remainder."""
-    n_chunks = F.ceil(F.size(toks) / n).cast("int")
-    return F.transform(
-        F.sequence(F.lit(1), n_chunks),
-        lambda i: F.concat_ws(" ", F.slice(toks, (i - 1) * n + 1, n)),
-    )
-
-
 def segments_sql(w: str, n: int = SEG_N) -> str:
     return (
         f"[array_to_string({w}[(i-1)*{n}+1:(i-1)*{n}+{n}], ' ') "
@@ -287,58 +246,46 @@ def boilerplate_remove(
     min_docs: int = BOILER_MIN_DOCS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "pandas",
     owner: list | None = None,
 ) -> DataFrame:
     """(doc_id, n_segs, n_boiler, clean_text): drop every segment that
     appears in >= min_docs DISTINCT docs, rejoin the survivors in
     original order.
 
-    ``impl='pandas'`` (default) chunks tokens per Arrow batch — the
-    Column build evaluates an interpreted slice+concat lambda per
-    chunk (the simhash_df disease); plain Python string splits are
-    exact-identical (whitespace split + ' '.join round-trips), so the
-    two impls agree byte-for-byte (tests/test_corpusops.py). The
-    ``'expr'`` build mirrors the DuckDB twin.
+    Segmentation chunks tokens per Arrow batch in plain Python — a
+    Column build would evaluate an interpreted slice+concat lambda per
+    chunk (the simhash_df disease). The result equals the DuckDB twin
+    ``boilerplate_remove_sql`` (tests/test_corpusops.py).
 
     Scale path: posexplode → groupBy(seg) countDistinct (map-side
     partial agg; the frequency threshold keeps the boilerplate side a
     tiny fraction of the segment space) → anti-join → reassemble via
     one doc_id shuffle. No driver-side collect; AQE picks broadcast
     for the boilerplate side when it fits."""
-    if impl == "pandas":
-        import re
+    import re
 
-        n = SEG_N
-        # byte-faithful tokens_col: F.trim strips ASCII spaces only,
-        # Java \s is ASCII-only, and Spark's split KEEPS leading and
-        # trailing empty tokens — re.split with the explicit class
-        # reproduces all three (probed against Spark; see test)
-        java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    n = SEG_N
+    # byte-faithful tokens_col: F.trim strips ASCII spaces only, Java
+    # \s is ASCII-only, and Spark's split KEEPS leading and trailing
+    # empty tokens — re.split with the explicit class reproduces all
+    # three (edge inputs pinned in tests/test_corpusops.py)
+    java_ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
-        def batches(it):
-            for pdf in it:
-                segs = []
-                for txt in pdf[text_col]:
-                    if txt is None:
-                        # expr twin: segments_col(NULL toks) is NULL →
-                        # (n_segs NULL, n_boiler NULL, clean_text '')
-                        segs.append(None)
-                        continue
-                    toks = java_ws.split(txt.lower().strip(" "))
-                    segs.append(
-                        [" ".join(toks[i : i + n]) for i in range(0, len(toks), n)]
-                    )
-                yield pd.DataFrame({"doc_id": pdf[id_col], "segs": segs})
+    def batches(it):
+        for pdf in it:
+            segs = []
+            for txt in pdf[text_col]:
+                if txt is None:
+                    # no segments: (n_segs NULL, n_boiler NULL, clean_text '')
+                    segs.append(None)
+                    continue
+                toks = java_ws.split(txt.lower().strip(" "))
+                segs.append([" ".join(toks[i : i + n]) for i in range(0, len(toks), n)])
+            yield pd.DataFrame({"doc_id": pdf[id_col], "segs": segs})
 
-        base = docs.select(id_col, text_col).mapInPandas(
-            batches, "doc_id bigint, segs array<string>"
-        )
-    else:
-        base = docs.select(
-            F.col(id_col).alias("doc_id"),
-            segments_col(tokens_col(F.col(text_col))).alias("segs"),
-        )
+    base = docs.select(id_col, text_col).mapInPandas(
+        batches, "doc_id bigint, segs array<string>"
+    )
     # branch-point persist: `base` feeds the boilerplate census (via
     # ex, itself used on both sides of the anti-join) AND the final
     # n_segs projection — three evaluations of the segmentation (and

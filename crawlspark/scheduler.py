@@ -85,16 +85,15 @@ class CrawlEngine:
         robots: list[dict],
         round_seconds: float = 600.0,
         max_depth: int = 10,
-        use_bloom: bool = True,
         bloom_shards: int = 32,
         salt_shards: int = 16,
-        seen_filter: str | None = None,
+        seen_filter: str = "bloom",
     ):
         # seen_filter: "bloom" (default; fastest build, incremental) |
         # "cuckoo" (deletion-capable → expire_seen/recrawl) | "exact"
         # (anti-join only — the semantic ground truth). All three are
         # observationally identical for dedup (probe-then-verify).
-        self.seen_filter = seen_filter or ("bloom" if use_bloom else "exact")
+        self.seen_filter = seen_filter
         self.spark = spark
         self.catalog = catalog
         self.pages = pages
@@ -122,7 +121,6 @@ class CrawlEngine:
         self._robots_by_host = {r["host"]: r for r in robots}
         self.round_seconds = round_seconds
         self.max_depth = max_depth
-        self.use_bloom = use_bloom
         self.bloom_shards = bloom_shards
         self.salt_shards = salt_shards
         # predicate-pushed slice of the pages table holding only the

@@ -13,8 +13,8 @@ array<float>, label)``:
 * ``ivf_topk`` — IVF-style bucketed search for the 100 TB path:
   deterministic "training-free" centroids (the first C vectors by id —
   a fixed, replayable choice), each corpus vector assigned to its
-  nearest centroid by a per-row argmax fold over the centroid literals
-  (NO corpus shuffle — computed once and reusable as a bucketed
+  nearest centroid by a numpy argmax per Arrow batch (NO corpus
+  shuffle — computed once and reusable as a bucketed
   table), queries probe the P nearest
   centroids' buckets only → candidate set shrinks by ~C/P. Exact
   cosine + top-k within the probed buckets. Recall < 1 by design;
@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from crawlspark.textops import cosine, cosine_sql
+from crawlspark.textops import cosine, cosine_pd, cosine_sql
 
 DEFAULT_K = 5
 IVF_CENTROIDS = 16
@@ -108,57 +108,15 @@ def brute_force_topk_sql(
 # ---------------------------------------------------------------------------
 
 
-def _assign_bucket(corpus: DataFrame, centroid_rows: list) -> DataFrame:
-    """Nearest-centroid bucket per corpus row, computed as a PER-ROW
-    argmax over the centroid list embedded as literals — the corpus
-    never shuffles and never carries its vectors through an exchange
-    (the previous cross-join + groupBy shuffled the whole corpus,
-    which is the scan-sized bottleneck at 10^10 vectors). Ties break
-    toward the larger cid (== max(struct(s, cid)) semantics, matching
-    the SQL twin). Centroids are driver-small by construction
-    (n_centroids × dim floats)."""
-    import math
-
-    # the row norm is the same for every centroid — compute it ONCE per
-    # row in a projection; centroid norms are Python constants (the
-    # same sequential double fold as the Column version, so the cosine
-    # is IEEE-identical to cosine())
-    na = F.sqrt(
-        F.aggregate(
-            F.col("nv"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-    with_norm = corpus.select("nid", "nv", na.alias("_na"))
-    cands = []
-    for cid, vec in centroid_rows:
-        cv = F.array(*[F.lit(float(x)) for x in vec])
-        nb = math.sqrt(_seq_sumsq(vec))
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("nv"), cv, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        s = F.round(dot / (F.col("_na") * F.lit(nb)), 9)
-        cands.append(F.struct(s.alias("s"), F.lit(int(cid)).alias("cid")))
-    # array_max orders structs lexicographically: highest sim, then
-    # highest cid — a linear expression (an iterated when() would nest
-    # prior branches exponentially and blow the expression tree)
-    best = F.array_max(F.array(*cands))
-    return with_norm.select("nid", "nv", best["cid"].alias("bucket"))
-
-
 def _assign_bucket_pandas(corpus: DataFrame, centroid_rows: list) -> DataFrame:
-    """Fast path of ``_assign_bucket``: identical bucket semantics
-    (round-9 cosine argmax, ties → larger cid) but all n_centroids
-    dot products per row come from ONE numpy matmul per Arrow batch —
-    no interpreted higher-order-function folds. The expression variant
-    stays as the bit-exact mirror of the DuckDB twin; pytest asserts
-    both assign every test vector to the same bucket (a flip would
-    need two cosines within ~1 ulp of the same 1e-9 rounding cell)."""
+    """Nearest-centroid bucket per corpus row: round-9 cosine argmax,
+    ties → larger cid (the ``assign`` CTE of ``ivf_topk_sql``). All
+    n_centroids dot products per row come from ONE numpy matmul per
+    Arrow batch, so the corpus never shuffles and never carries its
+    vectors through an exchange. Centroids are driver-small by
+    construction (n_centroids × dim floats). pytest asserts every test
+    vector lands in the twin's bucket (a flip would need two cosines
+    within ~1 ulp of the same 1e-9 rounding cell)."""
     rows = sorted(centroid_rows)  # ascending cid
     cids = np.array([c for c, _ in rows], dtype=np.int32)
     C = np.array([v for _, v in rows], dtype=np.float64)
@@ -171,9 +129,8 @@ def _assign_bucket_pandas(corpus: DataFrame, centroid_rows: list) -> DataFrame:
             M = np.stack(pdf["nv"].to_numpy()).astype(np.float64)
             norms = np.linalg.norm(M, axis=1, keepdims=True)
             if not norms.all():
-                # the expr twin raises DIVIDE_BY_ZERO here (ANSI mode);
                 # an all-NaN similarity row would otherwise silently
-                # argmax to an arbitrary bucket — fail just as loudly
+                # argmax to an arbitrary bucket — fail loudly instead
                 bad = pdf["nid"].iloc[int(np.flatnonzero(norms == 0)[0])]
                 raise ValueError(
                     f"zero-norm embedding (nid={bad}) has no cosine "
@@ -193,16 +150,6 @@ def _assign_bucket_pandas(corpus: DataFrame, centroid_rows: list) -> DataFrame:
     return dbl.mapInPandas(batches, "nid bigint, nv array<double>, bucket int")
 
 
-def _seq_sumsq(vec: list) -> float:
-    """Sequential left-fold sum of squares — the exact add order of
-    the Column-side F.aggregate, so the constant norm is bit-identical
-    to what cosine() would compute."""
-    acc = 0.0
-    for x in vec:
-        acc = acc + float(x) * float(x)
-    return acc
-
-
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -211,7 +158,6 @@ def ivf_topk(
     n_probes: int = IVF_PROBES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """IVF ANN: corpus bucketed by nearest centroid; queries search the
     ``n_probes`` nearest buckets only. Same output schema as
@@ -219,11 +165,9 @@ def ivf_topk(
     bucketed-by on write, so a query touches n_probes/n_centroids of
     the corpus.
 
-    ``impl='pandas'`` (default): numpy-matmul bucket assignment and
-    vectorized candidate scoring (Arrow batches, no per-row Python);
-    ``impl='expr'`` is the pure-Column path, the bit-exact mirror of
-    the DuckDB twin ``ivf_topk_sql`` — pytest asserts both impls
-    return identical rows on the test embeddings."""
+    Bucket assignment and candidate scoring are numpy per Arrow batch
+    (no per-row Python); pytest asserts the rows equal the DuckDB twin
+    ``ivf_topk_sql`` on the test embeddings."""
     centroids_df = (
         emb.orderBy(id_col)
         .limit(n_centroids)
@@ -234,8 +178,7 @@ def ivf_topk(
         (r["cid"], list(r["cv"])) for r in centroids_df.collect()
     ]
     corpus = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    assign = _assign_bucket_pandas if impl == "pandas" else _assign_bucket
-    bucketed = assign(corpus, centroid_rows)
+    bucketed = _assign_bucket_pandas(corpus, centroid_rows)
 
     q = _queries_df(emb, n_queries, id_col, vec_col)
     # per query: the n_probes nearest centroids
@@ -248,12 +191,7 @@ def ivf_topk(
         .filter(F.col("prank") <= n_probes)
         .select("qid", "qv", F.col("cid").alias("bucket"))
     )
-    if impl == "pandas":
-        from crawlspark.textops import cosine_pd
-
-        raw_cos = cosine_pd()(F.col("qv"), F.col("nv"))
-    else:
-        raw_cos = cosine(F.col("qv"), F.col("nv"))
+    raw_cos = cosine_pd()(F.col("qv"), F.col("nv"))
     scored = (
         bucketed.join(F.broadcast(probes), "bucket")
         .filter(F.col("qid") != F.col("nid"))

@@ -9,18 +9,22 @@ immutable parquet files per round, which is exactly Spark's file
 streaming source contract — so the same storage does double duty as a
 stream without a broker.
 
-* ``stream_crawl_log`` — follows a catalog's crawl_log data files and
-  emits per-(window, host) fetch/error counts with a watermark: a live
-  politeness/health dashboard feed.
-* ``stream_events`` — generic watermarked tumbling-window aggregation
-  over an events-shaped directory (ts, event_type, value), the same
-  semantics as the batch ``windowed_events`` driver query, so batch
-  output is the streaming oracle (tested with Trigger.AvailableNow).
+* ``stream_crawl_log_live`` — one long-running query that follows a
+  catalog's committed crawl_log snapshots and keeps per-(round, host)
+  fetch/error counts in a parquet sink: a live politeness/health
+  dashboard feed (read it back with ``read_crawl_log_live``).
+* ``stream_host_health`` — per-host fetch health carried across
+  triggers in ``applyInPandasWithState``.
+* ``stream_events`` / ``stream_sessions`` / ``stream_dedup`` — generic
+  watermarked aggregations over an events-shaped directory (ts,
+  event_type, value), the same semantics as the batch driver queries,
+  so batch output is the streaming oracle.
 
-Both return unstarted streaming DataFrames; callers pick sink +
-trigger. Tests drive them with ``availableNow`` into memory sinks and
-compare against the batch equivalent — late-data semantics come from
-the watermark (events later than the watermark horizon drop).
+Except the live monitor (which starts itself), these return unstarted
+streaming DataFrames; callers pick sink + trigger. Tests drive them
+with ``availableNow`` into memory sinks and compare against the batch
+equivalent — late-data semantics come from the watermark (events later
+than the watermark horizon drop).
 """
 
 from __future__ import annotations
@@ -44,9 +48,9 @@ def _committed_dir_filter(catalog_root: str, table: str):
     (b) dirs a concurrent expire_snapshots may delete; both would skew
     the monitoring counts (ADVICE r2). The committed set is resolved
     ONCE, when the source is built — so a query over this filter only
-    sees snapshots committed before it started (see stream_crawl_log's
-    poll contract; ``stream_crawl_log_live`` lifts it by re-resolving
-    per micro-batch)."""
+    sees snapshots committed before it started: rebuild it per poll
+    (``stream_host_health``'s contract). ``stream_crawl_log_live``
+    instead re-resolves the manifest per micro-batch."""
     committed = _committed_data_dirs(catalog_root, table)
     snap_dir = F.regexp_extract(F.input_file_name(), r"(snap-\d+)", 1)
     return snap_dir.isin(*sorted(committed)) if committed else F.lit(False)
@@ -55,37 +59,6 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
-
-
-def stream_crawl_log(
-    spark: SparkSession, catalog_root: str, window: str = "10 minutes"
-) -> DataFrame:
-    """Windowed per-host fetch health over a live catalog's crawl_log
-    files. No event-time column exists on the log (rounds are logical
-    time), so rounds map to processing buckets via ``round`` grouping.
-
-    Poll contract (IMPORTANT): the committed-snapshot filter is frozen
-    at build time, so this is a *per-poll* source — build the stream,
-    drain it (``availableNow``/``processAllAvailable``), stop, and
-    rebuild on the next poll (exactly what tests and the driver queries
-    do; the checkpoint makes re-polls incremental). A long-running
-    continuous query would silently drop every round committed after it
-    started: a plain file source cannot re-read the manifest per
-    micro-batch, and the snap-* glob alone would double-count orphan
-    dirs (the ADVICE r2 bug this filter exists to prevent)."""
-    src = (
-        spark.readStream.schema(CRAWL_LOG_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(os.path.join(catalog_root, "crawl_log", "snap-*"))
-        .where(_committed_dir_filter(catalog_root, "crawl_log"))
-    )
-    return (
-        src.groupBy("round", "host")
-        .agg(
-            F.count("*").alias("fetches"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failures"),
-        )
-    )
 
 
 def _committed_data_dirs(catalog_root: str, table: str) -> set[str]:
@@ -116,8 +89,7 @@ def stream_crawl_log_live(
     rows_per_second: int = 4,
 ):
     """CONTINUOUS crawl-log monitor — one long-running query that picks
-    up rounds committed AFTER it started, lifting ``stream_crawl_log``'s
-    per-poll restriction (VERDICT r4 missing #3 / next #3).
+    up rounds committed AFTER it started.
 
     A plain file source cannot re-read the manifest per micro-batch
     (its committed-dir filter is frozen at build time), so discovery is
@@ -138,8 +110,7 @@ def stream_crawl_log_live(
     partition with identical rows — idempotent, no double count.
 
     Per-dir grain also keeps each micro-batch O(new rounds): processed
-    dirs are never re-read, matching the per-poll variant's
-    checkpoint-incrementality. Read the monitor output with
+    dirs are never re-read. Read the monitor output with
     ``read_crawl_log_live`` (sums dirs back to per-(round, host)).
 
     Returns the started StreamingQuery; caller owns ``stop()``."""
@@ -195,7 +166,7 @@ def stream_crawl_log_live(
 
 def read_crawl_log_live(spark: SparkSession, out_dir: str) -> DataFrame:
     """Batch view over a live monitor's sink: per-(round, host) totals
-    (summing the per-dir partials; same schema as stream_crawl_log)."""
+    (summing the per-dir partials): round, host, fetches, failures."""
     return (
         spark.read.parquet(os.path.join(out_dir, "data"))
         .groupBy("round", "host")

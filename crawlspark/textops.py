@@ -355,51 +355,36 @@ def simhash_df(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
-    impl: str = "pandas",
 ) -> DataFrame:
     """(doc_id, sim): SimHash over *distinct* tokens — bit i of the
     result is 1 iff more distinct tokens have bit i set than not.
 
-    The md5→int token hashing stays a JVM-side projection (codegen);
-    the 32 majority-vote bit folds are the hot part. ``impl='pandas'``
-    (default) computes them with numpy per Arrow batch — pure integer
-    ops, so the result is BIT-IDENTICAL to ``impl='expr'`` (the
-    32 interpreted ``F.aggregate`` folds, the literal mirror of the
-    DuckDB twin); pytest asserts equality. Inlining the hash into each
-    fold would recompute md5 32× per token — both impls hash once."""
+    The md5→int token hashing stays a JVM-side projection (codegen),
+    once per token; the 32 majority-vote bit folds are the hot part and
+    run with numpy per Arrow batch — pure integer ops, so the result is
+    bit-identical to the DuckDB twin ``simhash_sql_expr`` (pinned in
+    tests/test_vectorized.py). NULL text has no tokens: sim 0."""
+    import numpy as np
+
     hashed = docs.select(
         F.col(id_col).alias("doc_id"),
         F.transform(
             F.array_distinct(tokens_col(F.col(text_col))), _token_hash60
         ).alias("hs"),
     )
-    if impl == "pandas":
-        import numpy as np
+    shifts = np.arange(bits, dtype=np.int64)
 
-        shifts = np.arange(bits, dtype=np.int64)
-
-        def batches(it):
-            for pdf in it:
-                sims = np.zeros(len(pdf), dtype=np.int64)
-                for r, hs in enumerate(pdf["hs"]):
+    def batches(it):
+        for pdf in it:
+            sims = np.zeros(len(pdf), dtype=np.int64)
+            for r, hs in enumerate(pdf["hs"]):
+                if hs is not None and len(hs):
                     h = np.asarray(hs, dtype=np.int64)
-                    if h.size:
-                        ones = ((h[:, None] >> shifts) & 1).sum(axis=0)
-                        sims[r] = ((2 * ones > h.size).astype(np.int64) << shifts).sum()
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "sim": sims})
+                    ones = ((h[:, None] >> shifts) & 1).sum(axis=0)
+                    sims[r] = ((2 * ones > h.size).astype(np.int64) << shifts).sum()
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sim": sims})
 
-        return hashed.mapInPandas(batches, "doc_id bigint, sim bigint")
-    n = F.size("hs")
-    out = F.lit(0).cast("bigint")
-    for i in range(bits):
-        ones = F.aggregate(
-            F.col("hs"),
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc + F.shiftright(h, i).bitwiseAND(F.lit(1)),
-        )
-        bit_set = (ones * 2) > n  # majority of tokens have bit i set
-        out = out + F.when(bit_set, F.lit(1 << i).cast("bigint")).otherwise(F.lit(0))
-    return hashed.select("doc_id", out.alias("sim"))
+    return hashed.mapInPandas(batches, "doc_id bigint, sim bigint")
 
 
 def simhash_sql_expr(toks: str, bits: int = SIMHASH_BITS) -> str:
@@ -617,37 +602,21 @@ def quality_sql(text: str, toks: str) -> dict[str, str]:
     }
 
 
-def fingerprint_col(sh: Column, k: int = FINGERPRINT_K) -> Column:
-    """Bottom-k document fingerprint: the k smallest md5 hashes of the
-    shingle set, joined — a compact sketch whose equality ⇒ high
-    overlap (winnowing-style selection, deterministic)."""
-    hashed = F.array_sort(F.transform(sh, lambda s: F.md5(s)))
-    return F.concat_ws("", F.slice(hashed, 1, k))
-
-
 def doc_fingerprint_df(
     docs: DataFrame,
     k: int = FINGERPRINT_K,
     n: int = SHINGLE_N,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "pandas",
 ) -> DataFrame:
-    """(doc_id, fp): the bottom-k fingerprint per doc. ``impl='expr'``
-    is the Column build (shingles_col → fingerprint_col), the literal
-    mirror of ``fingerprint_sql``; ``impl='pandas'`` (default) keeps
-    tokenization JVM-side but shingles+md5+sort run per Arrow batch in
-    Python — the md5-per-shingle ``F.transform`` is an interpreted
-    higher-order function and dominates the expression path's cost.
-    Output is exactly equal (md5 hex + lexicographic sort are
-    engine-independent; duplicate shingles collapse to duplicate
-    hashes either way — the sorted prefix is identical), asserted in
-    tests/test_vectorized.py."""
-    if impl != "pandas":
-        return docs.select(
-            F.col(id_col).alias("doc_id"),
-            fingerprint_col(shingles_col(tokens_col(F.col(text_col)), n), k).alias("fp"),
-        )
+    """(doc_id, fp): the bottom-k document fingerprint — the k smallest
+    md5 hashes of the doc's shingle set, joined; a compact sketch whose
+    equality ⇒ high overlap. Tokenization stays JVM-side; shingles, md5
+    and the sort run per Arrow batch in Python (an md5-per-shingle
+    ``F.transform`` is an interpreted higher-order function). md5 hex
+    and a lexicographic sort are engine-independent, so the output
+    equals the DuckDB twin ``fingerprint_sql`` (tests/test_vectorized.py).
+    NULL text fingerprints like empty text: md5 of the empty shingle."""
     import hashlib
 
     toks_df = docs.select(
@@ -658,11 +627,10 @@ def doc_fingerprint_df(
         for pdf in it:
             fps = []
             for toks in pdf["toks"]:
-                toks = list(toks)
+                toks = list(toks) if toks is not None else []
                 if len(toks) >= n:
-                    # dict preserves first-occurrence distinct order,
-                    # same as F.array_distinct (order is irrelevant
-                    # after the sort, but keep the set identical)
+                    # the distinct shingle set (shingles_sql's
+                    # list_distinct); order is irrelevant after the sort
                     grams = dict.fromkeys(
                         " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
                     )
@@ -711,11 +679,11 @@ def cosine_pd():
     numpy einsum per batch instead of an interpreted per-row
     ``F.aggregate`` fold. Returns the RAW double; callers apply
     ``F.round`` Spark-side so the rounding mode (HALF_UP) is identical
-    to the expression path. Numerically this differs from ``cosine()``
-    only in summation order (pairwise vs left fold, ~1 ulp), which the
-    6/9-dp rounding the callers apply absorbs; the expression path is
-    kept as the bit-exact oracle twin and pytest asserts end-to-end
-    equality of both paths on the real test embeddings."""
+    to ``cosine()``'s. Numerically this differs from ``cosine()`` and
+    ``cosine_sql`` only in summation order (pairwise vs left fold,
+    ~1 ulp), which the 6/9-dp rounding the callers apply absorbs;
+    pytest asserts end-to-end equality with the DuckDB twins on the
+    real test embeddings."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -861,7 +829,6 @@ def embedding_lsh_pairs(
     n_bits: int = EMB_LSH_BITS,
     bands: int = EMB_LSH_BANDS,
     owner: list | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold via sign-LSH banding:
     32 hyperplane sign bits → 4 band values → bucket self-join →
@@ -874,65 +841,39 @@ def embedding_lsh_pairs(
     ~bands/2^(bits/bands) of n² (tune bits/band up at higher n); true
     near-dups (θ small) collide with prob ≥ 1-(1-(1-θ/π)^(bits/bands))^bands.
 
-    ``impl='pandas'`` (default, the fast path): all 32 hyperplane dots
-    per row come from ONE numpy matmul per Arrow batch (mapInPandas),
-    and the verify cosine is the vectorized ``cosine_pd`` — no
-    interpreted higher-order-function folds anywhere. ``impl='expr'``
-    is the pure-Column construction, kept because it is the bit-exact
-    mirror of the DuckDB twin (``embedding_lsh_pairs_sql``); a pytest
-    asserts both impls produce identical output on the real test
-    embeddings (sign flips would need |dot| ≲ 1e-15, which the planted
-    corpus never approaches)."""
+    All 32 hyperplane dots per row come from ONE numpy matmul per Arrow
+    batch (mapInPandas) and the verify cosine is the vectorized
+    ``cosine_pd`` — no interpreted higher-order-function folds. The
+    output equals the DuckDB twin ``embedding_lsh_pairs_sql`` on the
+    real test embeddings (tests/test_vectorized.py; a sign flip would
+    need |dot| ≲ 1e-15, which the planted corpus never approaches)."""
+    import numpy as np
+
     planes = hyperplane_signs(n_bits, dim)
     bits_per_band = n_bits // bands
     s = emb.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
-    if impl == "pandas":
-        import numpy as np
-        import pandas as pd
+    P = np.array(planes, dtype=np.float64)  # (n_bits, dim)
+    wts = (1 << np.arange(bits_per_band)).astype(np.int64)
 
-        P = np.array(planes, dtype=np.float64)  # (n_bits, dim)
-        wts = (1 << np.arange(bits_per_band)).astype(np.int64)
-
-        def sig_batches(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                bits = (M @ P.T >= 0).astype(np.int64)  # (n, n_bits)
-                bvals = bits.reshape(len(pdf), bands, bits_per_band) @ wts
-                yield pd.DataFrame(
-                    {
-                        "vid": np.repeat(pdf["vid"].to_numpy(), bands),
-                        "band": np.tile(
-                            np.arange(bands, dtype=np.int32), len(pdf)
-                        ),
-                        "band_val": bvals.ravel().astype(np.int32),
-                    }
-                )
-
-        banded = s.mapInPandas(sig_batches, "vid bigint, band int, band_val int")
-    else:
-        bit_cols = []
-        for p in range(n_bits):
-            plane = F.array(*[F.lit(float(c)) for c in planes[p]])
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), plane, lambda x, r: x * r),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+    def sig_batches(it):
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            bits = (M @ P.T >= 0).astype(np.int64)  # (n, n_bits)
+            bvals = bits.reshape(len(pdf), bands, bits_per_band) @ wts
+            yield pd.DataFrame(
+                {
+                    "vid": np.repeat(pdf["vid"].to_numpy(), bands),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), len(pdf)),
+                    "band_val": bvals.ravel().astype(np.int32),
+                }
             )
-            bit_cols.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
-        band_cols = []
-        for b in range(bands):
-            bv = F.lit(0)
-            for j in range(bits_per_band):
-                bv = bv + bit_cols[b * bits_per_band + j] * F.lit(1 << j)
-            band_cols.append(bv)
-        banded = s.select(
-            "vid", F.posexplode(F.array(*band_cols)).alias("band", "band_val")
-        )
+
+    banded = s.mapInPandas(sig_batches, "vid bigint, band int, band_val int")
     banded = _branch_persist(banded, owner)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -947,11 +888,7 @@ def embedding_lsh_pairs(
     )
     sa = s.select(F.col("vid").alias("id_a"), F.col("v").alias("v_a"))
     sb = s.select(F.col("vid").alias("id_b"), F.col("v").alias("v_b"))
-    raw_cos = (
-        cosine_pd()(F.col("v_a"), F.col("v_b"))
-        if impl == "pandas"
-        else cosine(F.col("v_a"), F.col("v_b"))
-    )
+    raw_cos = cosine_pd()(F.col("v_a"), F.col("v_b"))
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
@@ -1257,6 +1194,11 @@ def dup_clusters(
     finally:
         sym.unpersist()
     if not converged:
+        # release what the caller will never receive: the live labels
+        # checkpoint, and edge_ids unless ``owner`` already holds it
+        _release_checkpoint(labels)
+        if owner is None:
+            _release_checkpoint(edge_ids)
         raise RuntimeError(
             f"dup_clusters: labels still changing after {max_iter} iterations "
             "(component diameter > 2^max_iter) — raise max_iter"

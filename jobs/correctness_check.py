@@ -7,7 +7,8 @@ the full 50-query matrix locally before the driver does.
 
 Usage: python jobs/correctness_check.py [--sf-dir /root/testdata/sf0.01]
        [--only q1,q2,...]
-Prints one JSON line per query plus a summary; exit 1 on any mismatch.
+Prints one JSON line per query plus a summary; exit 1 on any mismatch
+or when no query ran (an --only filter that matches nothing).
 """
 
 from __future__ import annotations
@@ -39,6 +40,9 @@ def _norm_cell(v) -> str:
         return "true" if v else "false"
     if isinstance(v, bytes):
         return v.hex()
+    if hasattr(v, "asDict"):
+        # a Spark struct (Row is a tuple): hash it like DuckDB's dict
+        return _norm_cell(v.asDict())
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(_norm_cell(x) for x in v) + "]"
     if isinstance(v, dict):
@@ -117,7 +121,8 @@ def main() -> None:
         if r["rows_match"] and r["schema_match"] and r["hash_match"]
     )
     print(json.dumps({"summary": f"{n_ok}/{len(results)} pass"}))
-    sys.exit(0 if n_ok == len(results) else 1)
+    # an --only filter matching no query checked nothing: fail
+    sys.exit(0 if results and n_ok == len(results) else 1)
 
 
 if __name__ == "__main__":

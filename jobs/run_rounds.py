@@ -81,7 +81,7 @@ def main() -> None:
         politeness_rows(),
         robots,
         round_seconds=args.round_seconds,
-        use_bloom=not args.no_bloom,
+        seen_filter="exact" if args.no_bloom else "bloom",
     )
     counters = eng.run(args.rounds, resume=not args.fresh)
     for c in counters:

@@ -1,6 +1,9 @@
 """Corpus-preparation operators: unit semantics on micro fixtures +
-fast-path ≡ expression-path equality on the real test tables. The
-DuckDB twins are exercised end-to-end by tests/test_entry.py."""
+fast-path ≡ DuckDB-twin equality on the real test tables. In the test
+names, ``pandas`` is the Arrow-batch kernel and ``expr`` its
+SQL-expression twin; NULL and whitespace edge inputs, where DuckDB's
+NULL and split semantics differ from Spark's, are pinned to literal
+rows. The twins also run end-to-end in tests/test_entry.py."""
 
 from __future__ import annotations
 
@@ -10,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawlspark import corpusops as C
+from tests.test_textops import _cmp, _duck
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -73,23 +77,38 @@ def test_repetition_short_doc_single_gram(spark):
     assert r["dup_2gram_frac"] == 0.0
 
 
+REP_COLS = [
+    "doc_id", "n_2grams", "n_distinct_2grams", "top_2gram_count", "n_3grams",
+    "n_distinct_3grams", "dup_2gram_frac", "top_2gram_frac", "dup_3gram_frac",
+    "keep_repetition",
+]
+
+
 def test_repetition_pandas_equals_expr(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = sorted(map(tuple, C.repetition_quality_df(docs).collect()))
-    slow = sorted(map(tuple, C.repetition_quality_df(docs, impl="expr").collect()))
-    assert fast == slow  # exact ints + identical divisions — bit-identical
-    assert len(fast) == docs.count()
+    out = C.repetition_quality_df(docs)
+    # exact ints + identical divisions — bit-identical to the twin
+    _cmp(out, _duck([("documents", docs.toPandas())]), C.repetition_quality_sql(), REP_COLS)
+    assert out.count() == docs.count()
+    # whitespace edges: Spark's split keeps the empty tokens around
+    # tabs; all-blank text is one empty token
+    edge = _docs(spark, [(1, "\tx y", "en"), (2, "z \t", "en"), (3, "   ", "en")])
+    assert sorted(map(tuple, C.repetition_quality_df(edge).collect())) == [
+        (1, 2, 2, 1, 1, 1, 0.0, 0.5, 0.0, False),
+        (2, 1, 1, 1, 1, 1, 0.0, 1.0, 0.0, False),
+        (3, 1, 1, 1, 1, 1, 0.0, 1.0, 0.0, False),
+    ]
 
 
 def test_repetition_null_text_pandas_equals_expr(spark):
-    # NULL text must not crash the pandas fast path (ADVICE r3); both
-    # impls take the short-doc branch: grams = [""] → counts 1/1/1
+    # NULL text must not crash the fast path (ADVICE r3); it takes the
+    # short-doc branch: grams = [""] → counts 1/1/1 (DuckDB's twin
+    # yields NULL counts here, so the row is pinned literally)
     docs = _docs(spark, [(1, None, "en"), (2, "a b c a b c", "en")])
-    fast = sorted(map(tuple, C.repetition_quality_df(docs).collect()))
-    slow = sorted(map(tuple, C.repetition_quality_df(docs, impl="expr").collect()))
-    assert fast == slow
-    row = {t[0]: t for t in fast}[1]
-    assert row[1:6] == (1, 1, 1, 1, 1)
+    assert sorted(map(tuple, C.repetition_quality_df(docs).collect())) == [
+        (1, 1, 1, 1, 1, 1, 0.0, 1.0, 0.0, False),
+        (2, 5, 3, 2, 4, 3, 0.4, 0.4, 0.25, False),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -130,25 +149,29 @@ def test_boilerplate_order_preserved(spark):
 
 def test_boilerplate_pandas_equals_expr(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fast = sorted(map(tuple, C.boilerplate_remove(docs).collect()))
-    slow = sorted(map(tuple, C.boilerplate_remove(docs, impl="expr").collect()))
-    assert fast == slow
+    out = C.boilerplate_remove(docs)
+    _cmp(
+        out,
+        _duck([("documents", docs.toPandas())]),
+        C.boilerplate_remove_sql(),
+        ["doc_id", "n_segs", "n_boiler", "clean_text"],
+    )
+    assert out.count() == docs.count()
     # edge whitespace: Spark's split keeps leading/trailing empty
     # tokens and trims ASCII spaces only — the Python path must match
     edge = _docs(spark, [(1, "\tx y", "en"), (2, "z \t", "en"), (3, "   ", "en")])
-    f = sorted(map(tuple, C.boilerplate_remove(edge).collect()))
-    s = sorted(map(tuple, C.boilerplate_remove(edge, impl="expr").collect()))
-    assert f == s
+    assert sorted(map(tuple, C.boilerplate_remove(edge).collect())) == [
+        (1, 1, 0, " x y"), (2, 1, 0, "z "), (3, 1, 0, ""),
+    ]
 
 
 def test_boilerplate_null_text_pandas_equals_expr(spark):
     # NULL text (ADVICE r3): segs NULL → (n_segs NULL, n_boiler NULL,
-    # clean_text '') on BOTH impls; posexplode drops the row upstream
+    # clean_text ''); posexplode drops the row upstream
     docs = _docs(spark, [(1, None, "en"), (2, "p q r", "en")])
-    fast = sorted(map(tuple, C.boilerplate_remove(docs).collect()))
-    slow = sorted(map(tuple, C.boilerplate_remove(docs, impl="expr").collect()))
-    assert fast == slow
-    assert fast[0] == (1, None, None, "")
+    assert sorted(map(tuple, C.boilerplate_remove(docs).collect())) == [
+        (1, None, None, ""), (2, 1, 0, "p q r"),
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -97,10 +97,10 @@ def test_replay_matches_simulator(spark, tiny_pages, round_seconds):
 
 
 def test_bloom_off_identical(spark, tiny_pages):
-    """use_bloom=False (exact join only) must be observationally
+    """seen_filter="exact" (exact join only) must be observationally
     identical — bloom is purely a physical optimization."""
-    cat_on = _engine(spark, tiny_pages, 600.0, use_bloom=True)
-    cat_off = _engine(spark, tiny_pages, 600.0, use_bloom=False)
+    cat_on = _engine(spark, tiny_pages, 600.0, seen_filter="bloom")
+    cat_off = _engine(spark, tiny_pages, 600.0, seen_filter="exact")
     seen_on = {r["url_canon"] for r in cat_on.read("seen").collect()}
     seen_off = {r["url_canon"] for r in cat_off.read("seen").collect()}
     assert seen_on == seen_off

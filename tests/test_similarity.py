@@ -103,15 +103,19 @@ def test_knn_join_pandas_matches_bruteforce(emb, emb_np):
 
 
 def test_assign_bucket_zero_norm_fails_loudly_both_impls(spark):
-    """A zero-norm vector has no cosine bucket. The expr path raises
-    Spark's ANSI DIVIDE_BY_ZERO; the numpy fast path must fail just as
-    loudly (ADVICE r3 — silently argmax-ing an all-NaN row would bucket
-    the vector arbitrarily and diverge from the oracle twin)."""
+    """A zero-norm vector has no cosine bucket. The numpy assignment
+    must fail loudly (ADVICE r3 — silently argmax-ing an all-NaN row
+    would bucket the vector arbitrarily and diverge from the oracle
+    twin), both called directly and through ``ivf_topk``."""
     corpus = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [1.0, 0.0])], "nid long, nv array<float>"
     )
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        S._assign_bucket(corpus, cents).collect()
     with pytest.raises(Exception, match="zero-norm"):
         S._assign_bucket_pandas(corpus, cents).collect()
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (9, [0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(Exception, match="zero-norm"):
+        S.ivf_topk(emb, n_queries=1, k=2, n_centroids=2, n_probes=1).collect()

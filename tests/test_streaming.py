@@ -42,66 +42,6 @@ def test_stream_events_equals_batch(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_stream_crawl_log_follows_catalog(spark, cat4, tmp_path):
-    out = ST.stream_crawl_log(spark, cat4.root)
-    ST.run_available_now(out, "log_agg", str(tmp_path / "ckpt2"))
-    got = {
-        (r["round"], r["host"]): (r["fetches"], r["failures"])
-        for r in spark.sql("SELECT * FROM log_agg").collect()
-    }
-    # batch oracle: append-mode snapshots each hold only their round's
-    # delta, so the snap-* union IS the full table (no overlap)
-    raw = spark.read.schema(ST.CRAWL_LOG_SCHEMA).parquet(
-        os.path.join(cat4.root, "crawl_log", "snap-*")
-    )
-    want = {
-        (r["round"], r["host"]): (r["fetches"], r["failures"])
-        for r in raw.groupBy("round", "host")
-        .agg(
-            F.count("*").alias("fetches"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failures"),
-        )
-        .collect()
-    }
-    assert got == want
-    assert any(f > 0 for f, _ in got.values())
-
-
-def test_stream_crawl_log_ignores_orphan_snapshot(spark, cat4, tmp_path):
-    """An orphan snap-* dir from a crashed, never-committed round must
-    NOT be ingested (the recovery contract says it is never referenced
-    again): the stream source filters the file glob against the
-    manifest's committed dir set (ADVICE r2)."""
-    import shutil
-
-    log_dir = os.path.join(cat4.root, "crawl_log")
-    committed = sorted(d for d in os.listdir(log_dir) if d.startswith("snap-"))
-    orphan = os.path.join(log_dir, "snap-999999")
-    shutil.copytree(os.path.join(log_dir, committed[0]), orphan)
-    try:
-        out = ST.stream_crawl_log(spark, cat4.root)
-        ST.run_available_now(out, "log_agg_orphan", str(tmp_path / "ckpt_orph"))
-        got = {
-            (r["round"], r["host"]): (r["fetches"], r["failures"])
-            for r in spark.sql("SELECT * FROM log_agg_orphan").collect()
-        }
-        raw = spark.read.schema(ST.CRAWL_LOG_SCHEMA).parquet(
-            *[os.path.join(log_dir, d) for d in committed]
-        )
-        want = {
-            (r["round"], r["host"]): (r["fetches"], r["failures"])
-            for r in raw.groupBy("round", "host")
-            .agg(
-                F.count("*").alias("fetches"),
-                F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failures"),
-            )
-            .collect()
-        }
-        assert got == want  # double-counting would inflate fetches
-    finally:
-        shutil.rmtree(orphan)
-
-
 def test_tableio_append_onto_bucketed_raises(spark, tmp_path):
     """Mixing write modes on one table is an unguarded data-loss hazard
     (append composes only base['dirs'], dropping bucketed rows) — the
@@ -122,11 +62,24 @@ def test_tableio_append_onto_bucketed_raises(spark, tmp_path):
 def test_stream_host_health_stateful(spark, cat4, tmp_path):
     """applyInPandasWithState across triggers: the final per-host state
     (total fetches, failures, consecutive-failure streak) must equal a
-    pure-Python fold over the canonically-ordered crawl log."""
-    out = ST.stream_host_health(spark, cat4.root)
-    ST.run_available_now(
-        out, "health", str(tmp_path / "ckpt3"), output_mode="update"
-    )
+    pure-Python fold over the canonically-ordered crawl log. An orphan
+    snap-* dir from a crashed, never-committed round must NOT be
+    ingested (the recovery contract says it is never referenced again):
+    the source filters the file glob against the manifest's committed
+    dir set (ADVICE r2)."""
+    import shutil
+
+    log_dir = os.path.join(cat4.root, "crawl_log")
+    committed = sorted(d for d in os.listdir(log_dir) if d.startswith("snap-"))
+    orphan = os.path.join(log_dir, "snap-999999")
+    shutil.copytree(os.path.join(log_dir, committed[0]), orphan)
+    try:
+        out = ST.stream_host_health(spark, cat4.root)
+        ST.run_available_now(
+            out, "health", str(tmp_path / "ckpt3"), output_mode="update"
+        )
+    finally:
+        shutil.rmtree(orphan)
     # update mode emits one row per host per trigger; the final state
     # is the row with the highest total (collect order across batches
     # is NOT guaranteed — don't rely on it)
@@ -139,7 +92,7 @@ def test_stream_host_health_stateful(spark, cat4, tmp_path):
 
     raw = (
         spark.read.schema(ST.CRAWL_LOG_SCHEMA)
-        .parquet(os.path.join(cat4.root, "crawl_log", "snap-*"))
+        .parquet(*[os.path.join(log_dir, d) for d in committed])
         .collect()
     )
     ordered = sorted(
@@ -159,7 +112,7 @@ def test_stream_host_health_stateful(spark, cat4, tmp_path):
             f += 1
             s += 1
         want[r["host"]] = (t, f, s)
-    assert got == want
+    assert got == want  # ingesting the orphan would inflate totals
     assert len(got) > 0
     assert sum(f for _, f, _ in got.values()) > 0, "fixture has dead links"
 
@@ -242,54 +195,33 @@ def test_stream_dedup_state_survives_across_polls(spark, tmp_path):
     assert spark.read.parquet(sink).count() == n_distinct
 
 
-def test_stream_crawl_log_per_poll_rebuild_sees_new_rounds(spark, tiny_pages, tmp_path):
-    """The committed-snapshot filter is frozen when the stream is built
-    (ADVICE r3), so the module contract is REBUILD-PER-POLL: a fresh
-    stream_crawl_log over the same checkpoint must (a) pick up rounds
-    committed after the previous poll's stream was built and (b) read
-    only the NEW snapshots' files (checkpoint-incremental), not re-scan
-    the old ones."""
-    import tempfile as _tf
-
-    from crawlspark.fixtures import gen_seeds, politeness_rows, robots_rows
-    from crawlspark.scheduler import CrawlEngine
-    from crawlspark.tableio import SnapshotCatalog
-
-    cat = SnapshotCatalog(_tf.mkdtemp(), spark)
-    mk = lambda: CrawlEngine(
-        spark, cat, tiny_pages, gen_seeds("tiny"), politeness_rows(),
-        robots_rows(42, "tiny"), round_seconds=600.0,
+def _log_partials(spark, log_dir, dirs):
+    """Per-(round, host, src_snap) fetch/failure counts of the given
+    crawl_log data dirs."""
+    rows = (
+        spark.read.schema(ST.CRAWL_LOG_SCHEMA)
+        .parquet(*[os.path.join(log_dir, d) for d in sorted(dirs)])
+        .withColumn("src_snap", F.regexp_extract(F.input_file_name(), r"(snap-\d+)", 1))
     )
-    mk().run(2, resume=False)
-    log_glob = os.path.join(cat.root, "crawl_log", "snap-*")
-    raw1 = spark.read.schema(ST.CRAWL_LOG_SCHEMA).parquet(log_glob)
-    rounds1, n_rows1 = (
-        {r["round"] for r in raw1.select("round").distinct().collect()},
-        raw1.count(),
+    return rows.groupBy("round", "host", "src_snap").agg(
+        F.count("*").alias("fetches"),
+        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failures"),
     )
 
-    ckpt = str(tmp_path / "ckpt_poll")
-    q1 = ST.run_available_now(ST.stream_crawl_log(spark, cat.root), "log_poll1", ckpt)
-    got1 = {r["round"] for r in spark.sql("SELECT DISTINCT round FROM log_poll1").collect()}
-    assert got1 == rounds1
 
-    # two MORE rounds commit after poll 1's stream was built
-    # (run(n) is the TOTAL round count; resume continues from round 2)
-    mk().run(4, resume=True)
-    raw2 = spark.read.schema(ST.CRAWL_LOG_SCHEMA).parquet(log_glob)
-    rounds2, n_rows2 = (
-        {r["round"] for r in raw2.select("round").distinct().collect()},
-        raw2.count(),
+def _committed_log_totals(spark, catalog_root):
+    """Batch oracle: per-(round, host) totals over exactly the
+    manifest-committed crawl_log dirs."""
+    dirs = ST._committed_data_dirs(catalog_root, "crawl_log")
+    totals = (
+        _log_partials(spark, os.path.join(catalog_root, "crawl_log"), dirs)
+        .groupBy("round", "host")
+        .agg(F.sum("fetches").alias("fetches"), F.sum("failures").alias("failures"))
     )
-    assert rounds2 > rounds1  # the engine really added rounds
-
-    # per-poll contract: rebuild the stream; the shared checkpoint
-    # makes the poll incremental
-    q2 = ST.run_available_now(ST.stream_crawl_log(spark, cat.root), "log_poll2", ckpt)
-    got2 = {r["round"] for r in spark.sql("SELECT DISTINCT round FROM log_poll2").collect()}
-    assert got2 == rounds2
-    poll2_input = sum(p["numInputRows"] for p in q2.recentProgress)
-    assert poll2_input == n_rows2 - n_rows1  # only the delta files read
+    return {
+        (r["round"], r["host"]): (r["fetches"], r["failures"])
+        for r in totals.collect()
+    }
 
 
 def test_stream_crawl_log_live_single_query_sees_new_rounds(
@@ -321,21 +253,6 @@ def test_stream_crawl_log_live_single_query_sees_new_rounds(
         os.path.join(log_dir, committed0[0]), os.path.join(log_dir, "snap-999999")
     )
 
-    def batch_want():
-        dirs = ST._committed_data_dirs(cat.root, "crawl_log")
-        raw = spark.read.schema(ST.CRAWL_LOG_SCHEMA).parquet(
-            *[os.path.join(log_dir, d) for d in sorted(dirs)]
-        )
-        return {
-            (r["round"], r["host"]): (r["fetches"], r["failures"])
-            for r in raw.groupBy("round", "host")
-            .agg(
-                F.count("*").alias("fetches"),
-                F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("failures"),
-            )
-            .collect()
-        }
-
     out_dir = str(tmp_path / "live_out")
 
     def live_got(expect_rounds):
@@ -360,12 +277,56 @@ def test_stream_crawl_log_live_single_query_sees_new_rounds(
     try:
         got1 = live_got({0, 1})
         assert {k[0] for k in got1} == {0, 1}
-        assert got1 == batch_want()
+        assert got1 == _committed_log_totals(spark, cat.root)
 
         # two MORE rounds commit while the SAME query keeps running
         mk().run(4, resume=True)
         got2 = live_got({0, 1, 2, 3})
         assert {k[0] for k in got2} == {0, 1, 2, 3}
-        assert got2 == batch_want()  # exact equality ⇒ no double count
+        assert got2 == _committed_log_totals(spark, cat.root)  # exact equality ⇒ no double count
     finally:
         q.stop()
+
+
+def test_stream_crawl_log_live_crash_window_no_double_count(spark, cat4, tmp_path):
+    """A monitor that crashed between writing a dir's partition and
+    marking the dir done in _processed.json must, on restart,
+    reprocess that dir and overwrite its own partition: per-(round,
+    host) totals equal the batch aggregation over the committed dirs,
+    with nothing counted twice."""
+    import json
+    import time as _time
+
+    log_dir = os.path.join(cat4.root, "crawl_log")
+    committed = sorted(ST._committed_data_dirs(cat4.root, "crawl_log"))
+    assert len(committed) >= 2
+    out_dir = str(tmp_path / "live_crash")
+    # the crashed run: every committed dir's partition is on disk, the
+    # last one is not in _processed.json
+    (
+        _log_partials(spark, log_dir, committed)
+        .write.partitionBy("src_snap")
+        .parquet(os.path.join(out_dir, "data"))
+    )
+    state_path = os.path.join(out_dir, "_processed.json")
+    with open(state_path, "w") as f:
+        json.dump({"dirs": committed[:-1]}, f)
+
+    q = ST.stream_crawl_log_live(spark, cat4.root, out_dir, str(tmp_path / "crash_ckpt"))
+    try:
+        deadline = _time.time() + 90
+        done = []
+        while _time.time() < deadline:
+            with open(state_path) as f:
+                done = json.load(f)["dirs"]
+            if done == committed:
+                break
+            _time.sleep(0.5)
+    finally:
+        q.stop()
+    assert done == committed, "restarted monitor never reprocessed the dir"
+    got = {
+        (r["round"], r["host"]): (r["fetches"], r["failures"])
+        for r in ST.read_crawl_log_live(spark, out_dir).collect()
+    }
+    assert got == _committed_log_totals(spark, cat4.root)

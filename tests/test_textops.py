@@ -206,23 +206,19 @@ def test_langid_markers():
     assert got == {1: "en", 2: "vi", 3: "und"}
 
 
-def test_fingerprint_vs_duckdb(spark, docs):
-    sh = T.shingles_col(T.tokens_col(F.col("text")))
-    out = docs.select("doc_id", T.fingerprint_col(sh).alias("fp"))
-    con = _duck([("documents", docs.toPandas())])
+def test_fingerprint_vs_duckdb(spark, synth_docs):
+    # the dup-bearing corpus (exact dups, ws/case variants, an empty
+    # doc); the real documents table is in tests/test_vectorized.py
+    con = _duck([("documents", synth_docs.toPandas())])
     sql = (
         f"SELECT doc_id, {T.fingerprint_sql(T.shingles_sql(T.tokens_sql('text')))} AS fp "
         "FROM documents"
     )
-    _cmp(out, con, sql, ["doc_id", "fp"])
+    _cmp(T.doc_fingerprint_df(synth_docs), con, sql, ["doc_id", "fp"])
 
 
 def test_fingerprint_equal_for_exact_dups(spark, synth_docs):
-    sh = T.shingles_col(T.tokens_col(F.col("text")))
-    fp = {
-        r["doc_id"]: r["fp"]
-        for r in synth_docs.select("doc_id", T.fingerprint_col(sh).alias("fp")).collect()
-    }
+    fp = {r["doc_id"]: r["fp"] for r in T.doc_fingerprint_df(synth_docs).collect()}
     assert fp[1] == fp[2] == fp[8]
     assert fp[1] != fp[5]
 
@@ -366,6 +362,52 @@ def test_dup_clusters_nonconvergence_raises(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge|still changing"):
         T.dup_clusters(docs, pairs, max_iter=2)
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_release_checkpoint_unpersists(spark):
+    """_release_checkpoint reaches through private internals (the
+    analyzed LogicalRDD): on the installed pyspark it must really drop
+    the checkpoint's persisted RDD, so an upgrade that moves the
+    internals fails here instead of silently leaking."""
+    df = spark.range(100).selectExpr("id", "id * 2 AS v")
+    before = _persistent_rdd_ids(spark)
+    ckpt = df.localCheckpoint(eager=True)
+    held = _persistent_rdd_ids(spark)
+    added = held - before
+    assert len(added) == 1, "localCheckpoint(eager=True) persists one RDD"
+    T._release_checkpoint(ckpt)
+    after = _persistent_rdd_ids(spark)
+    # shrank by that one RDD (ids, not sizes: ContextCleaner may drop
+    # unrelated garbage RDDs concurrently)
+    assert not added & after and not after - held
+
+
+def test_dup_clusters_nonconvergence_releases_checkpoints(spark):
+    """The raise path leaks nothing: the live labels checkpoint is
+    released before the RuntimeError and edge_ids goes to ``owner``, so
+    once the caller releases ``owner`` the persisted-RDD set is back to
+    its pre-call state."""
+    n = 8  # chain diameter 7 > 2^max_iter
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(n)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    owner: list = []
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="still changing"):
+        T.dup_clusters(docs, pairs, max_iter=1, owner=owner)
+    assert owner, "edge_ids must be registered with the owner"
+    assert _persistent_rdd_ids(spark) - before, "owner still holds edge_ids"
+    for df in owner:
+        df.unpersist()
+        T._release_checkpoint(df)
+    assert not _persistent_rdd_ids(spark) - before
 
 
 def test_dup_clusters_random_graphs_vs_union_find(spark):
