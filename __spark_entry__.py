@@ -99,14 +99,10 @@ def _slot_release(key: str) -> list[DataFrame]:
     fresh owner list, pre-registered under ``key``: persists appended
     to it (directly or via operator ``owner=`` params) are released on
     the next ``_slot_release(key)``. Slot entries may be CacheManager
-    persists (released by unpersist) or localCheckpoints (released by
-    the explicit RDD unpersist helper; unpersist() is a no-op on
-    them) — each release path is a no-op on the other kind."""
-    from crawlspark.textops import _release_checkpoint
+    persists or localCheckpoints; ``release_frames`` handles both."""
+    from crawlspark.textops import release_frames
 
-    for prev in _PERSIST_SLOTS.pop(key, []):
-        prev.unpersist()
-        _release_checkpoint(prev)
+    release_frames(*_PERSIST_SLOTS.pop(key, []))
     owned: list[DataFrame] = []
     _PERSIST_SLOTS[key] = owned
     return owned

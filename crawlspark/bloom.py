@@ -221,21 +221,21 @@ def dedup_against_seen(
     left_anti verification of the positives. Without a bloom table it
     degrades to the exact join alone (the semantic ground truth).
 
-    ``owner``: optional list the internal branch-point persist is
-    appended to, so the caller can unpersist it once the round's
-    actions have materialized (persist-lifecycle ownership)."""
+    ``owner``: optional list the internal stage checkpoint is appended
+    to, so the caller can release it (``textops.release_frames``) once
+    the round's actions have materialized."""
     seen_keys = seen.select(url_col)
     if bloom is None:
         return candidates.join(seen_keys, url_col, "left_anti")
-    # branch-point persist: probed feeds BOTH the fresh and the
-    # suspects branch — without it the whole upstream (scan +
-    # canonicalize UDF + cogroup probe) recomputes once per branch.
-    # Candidate rows are narrow key columns (no page bytes), so this
-    # is the frontier working set, disk-backed at scale.
-    from pyspark import StorageLevel
-
-    probed = bloom_probe(candidates, bloom, n_shards, url_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # stage boundary: probed feeds BOTH the fresh and the suspects
+    # branch — without a pin the whole upstream (scan + canonicalize
+    # UDF + cogroup probe) recomputes once per branch. A lazy
+    # localCheckpoint rather than a persist: downstream plans see a
+    # LogicalRDD scan instead of carrying this subtree (planning cost
+    # grows with every nested cached plan). Candidate rows are narrow
+    # key columns (no page bytes), the frontier working set.
+    probed = bloom_probe(candidates, bloom, n_shards, url_col).localCheckpoint(
+        eager=False
     )
     if owner is not None:
         owner.append(probed)

@@ -246,13 +246,13 @@ def dedup_against_seen_cuckoo(
     set.difference ground truth); negatives definitely-new *unless a
     deletion collided* — in which case the row simply refetches, which
     the natural-key upsert absorbs."""
-    from pyspark import StorageLevel
-
     seen_keys = seen.select(url_col)
     if cuckoo is None:
         return candidates.join(seen_keys, url_col, "left_anti")
-    probed = cuckoo_probe(candidates, cuckoo, n_shards, url_col).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # stage boundary, pinned like bloom.dedup_against_seen's: one lazy
+    # checkpoint feeds both the fresh and the suspects branch
+    probed = cuckoo_probe(candidates, cuckoo, n_shards, url_col).localCheckpoint(
+        eager=False
     )
     if owner is not None:
         owner.append(probed)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from crawlspark.bloom import build_bloom, dedup_against_seen
 from crawlspark.parsers.udfs import parse_detail_udf
 from crawlspark.politeness import apply_robots, pop_per_host
+from crawlspark.textops import release_frames
 from crawlspark.urlnorm import attach_canonical
 
 
@@ -40,8 +41,8 @@ def run_detail_pipeline(
     budget: int = 1_000_000_000,
 ) -> int:
     """One full pipeline pass; returns extracted-row count. Internal
-    branch-point persists are released before returning (repeated
-    passes — warm-up + reps — must not accumulate cached frames)."""
+    stage checkpoints are released before returning (repeated passes —
+    warm-up + reps — must not accumulate pinned frames)."""
     owned: list[DataFrame] = []
     cand = pages.select("url").select(
         "url",
@@ -97,8 +98,7 @@ def run_detail_pipeline(
         ],
     )
     n = extracted.filter(F.length("out_text") >= 0).count()
-    for df in owned:
-        df.unpersist()
+    release_frames(*owned)
     return n
 
 

@@ -114,14 +114,13 @@ def pop_per_host(
     order_cols = order_cols or DISCOVERY_KEY
     order = [F.col(c) for c in order_cols]
     bud = F.broadcast(budget)
-    from pyspark import StorageLevel
-
-    # branch-point persist: cand feeds the count agg, the easy path
-    # and the contended path — narrow key columns only.
+    # stage boundary: cand feeds the count agg, the easy path and the
+    # contended path — a lazy localCheckpoint (narrow key columns only)
+    # so each branch scans it instead of re-planning the upstream
     cand = (
         candidates.join(bud, "host", "left")
         .withColumn("remaining", F.coalesce("remaining", F.lit(default_remaining)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     if owner is not None:
         owner.append(cand)

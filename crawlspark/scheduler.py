@@ -52,6 +52,7 @@ from crawlspark.politeness import (
 )
 from crawlspark.simulator import MAX_ATTEMPTS, SITE_ORDER, robots_decision
 from crawlspark.tableio import SnapshotCatalog
+from crawlspark.textops import release_frames
 from crawlspark.urlnorm import attach_canonical, canonicalize, host_of, path_after_host
 
 CAND_SCHEMA = (
@@ -206,6 +207,17 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def run_round(self, rnd: int) -> dict:
+        # round-owned frames: every stage checkpoint pinned on behalf of
+        # this round is released once the round commits — or fails, so
+        # a raising commit leaks nothing (resume replays the round,
+        # which has no crawl_log marker)
+        owned: list[DataFrame] = []
+        try:
+            return self._run_round(rnd, owned)
+        finally:
+            release_frames(*owned)
+
+    def _run_round(self, rnd: int, owned: list[DataFrame]) -> dict:
         spark = self.spark
         used: dict[str, int] = {}
         budget_left: dict[str, int] = {}
@@ -222,10 +234,6 @@ class CrawlEngine:
         log_rows: list[tuple] = []
         cand_rows: list[tuple] = []
         c1_frames: list[DataFrame] = []
-        # round-owned persist registry: everything persisted on behalf
-        # of this round is unpersisted after the commit (lifecycle
-        # ownership — no persisted-RDD growth across a long run)
-        round_persists: list[DataFrame] = []
 
         # ---- discovery: serial chain walks (F-A), one seed per site ----
         active_seeds = {
@@ -290,26 +298,27 @@ class CrawlEngine:
                 else None
             )
             fresh = dedup_against_seen_cuckoo(
-                cand, seen, ck, self.bloom_shards, owner=round_persists
+                cand, seen, ck, self.bloom_shards, owner=owned
             )
         else:
             bloom = None
             if self.seen_filter == "bloom" and self.catalog.exists("seen_bloom"):
                 bloom = self.catalog.read_as_of_round("seen_bloom", rnd - 1)
             fresh = dedup_against_seen(
-                cand, seen, bloom, self.bloom_shards, owner=round_persists
+                cand, seen, bloom, self.bloom_shards, owner=owned
             )
 
         # ---- robots gate ----
-        # branch-point persist: gated feeds both the allowed pop chain
-        # and the blocked counter — unpersisted it re-runs the whole
-        # canonicalize-UDF + window + seen-filter chain per branch
-        from pyspark import StorageLevel
-
-        gated = apply_robots(fresh, self.robots_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        round_persists.append(gated)
+        # Stage boundaries from here on are lazy localCheckpoints, each
+        # materialized by the first action that reads it: gated feeds
+        # the allowed pop chain and the blocked counter, which would
+        # otherwise each re-run the canonicalize-UDF + window + seen
+        # filter chain. A checkpoint, not a persist: a later plan scans
+        # a LogicalRDD, while a persist leaves every earlier cached plan
+        # nested inside it, and plan strings (rebuilt per SQL execution
+        # and AQE re-plan) grow ~2x per nested level.
+        gated = apply_robots(fresh, self.robots_df).localCheckpoint(eager=False)
+        owned.append(gated)
         allowed = gated.filter(F.col("allowed")).drop("allowed")
         n_blocked = gated.filter(~F.col("allowed")).count()
 
@@ -332,11 +341,12 @@ class CrawlEngine:
             remaining,
             salt_shards=self.salt_shards,
             default_remaining=self._default_capacity,
-            owner=round_persists,
-        )
+            owner=owned,
+        ).localCheckpoint(eager=False)
+        owned.append(popped_all)
+        # one pop: the fetch side and the frontier write both scan it
         to_fetch = popped_all.filter(F.col("popped")).drop("popped")
         pending = popped_all.filter(~F.col("popped")).drop("popped")
-        to_fetch.cache()
         n_popped = to_fetch.count()
 
         # ---- fetch: join vs pages without shuffling the big side ----
@@ -347,7 +357,8 @@ class CrawlEngine:
             # SHUFFLE_HASH on the popped side: the html-carrying scan
             # streams through the join unsorted (SMJ would sort TBs)
             hit = pages.join(to_fetch.hint("SHUFFLE_HASH"), "url", "inner")
-        hit = hit.cache()
+        hit = hit.localCheckpoint(eager=False)
+        owned.append(hit)
         parsed = hit.withColumn(
             "_p", parse_detail_udf(F.col("site"), F.col("url"), F.col("html"))
         ).select(
@@ -364,8 +375,20 @@ class CrawlEngine:
             F.col("_p.contract_type_raw").alias("contract_type_raw"),
             F.col("_p.listed_date_raw").alias("listed_date_raw"),
         )
-        parsed = parsed.cache()
-        n_fetched = parsed.count()
+        parsed = parsed.localCheckpoint(eager=False)
+        owned.append(parsed)
+
+        # ---- per-partition lineage for the fetch stage (M5) ----
+        # its collect is the action that materializes hit and parsed,
+        # and its row sum is the fetched count
+        lineage = [
+            {"round": rnd, "stage": "fetch", "partition": int(r["pid"]),
+             "rows": int(r["cnt"])}
+            for r in parsed.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        ]
+        n_fetched = sum(e["rows"] for e in lineage)
 
         failed = to_fetch.join(
             F.broadcast(hit.select("url")), "url", "left_anti"
@@ -385,15 +408,6 @@ class CrawlEngine:
             "host",
             F.coalesce("ok", F.lit(False)).alias("ok"),
         )
-
-        # ---- per-partition lineage for the fetch stage (M5) ----
-        lineage = [
-            {"round": rnd, "stage": "fetch", "partition": int(r["pid"]),
-             "rows": int(r["cnt"])}
-            for r in parsed.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        ]
 
         # ---- commits (crawl_log last = round commit marker) ----
         seen_new = seen.unionByName(
@@ -496,11 +510,6 @@ class CrawlEngine:
             counters=counters,
             lineage=lineage,
         )
-        to_fetch.unpersist()
-        hit.unpersist()
-        parsed.unpersist()
-        for df in round_persists:
-            df.unpersist()
         return counters
 
     # ------------------------------------------------------------------

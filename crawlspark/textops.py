@@ -1079,6 +1079,16 @@ def _release_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def release_frames(*frames: DataFrame) -> None:
+    """Release owned frames of either kind: a CacheManager persist
+    (``unpersist``) or a localCheckpoint (``_release_checkpoint``).
+    Each release path is a no-op on the other kind, so owner lists may
+    mix them."""
+    for df in frames:
+        df.unpersist()
+        _release_checkpoint(df)
+
+
 def dup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
@@ -1187,18 +1197,18 @@ def dup_clusters(
             # release helper is a no-op for non-checkpoint plans)
             prev_labels = labels
             labels = new_labels
-            _release_checkpoint(prev_labels)
+            release_frames(prev_labels)
             if cur_sum == prev_sum:
                 converged = True
             prev_sum = cur_sum
     finally:
-        sym.unpersist()
+        release_frames(sym)
     if not converged:
         # release what the caller will never receive: the live labels
         # checkpoint, and edge_ids unless ``owner`` already holds it
-        _release_checkpoint(labels)
+        release_frames(labels)
         if owner is None:
-            _release_checkpoint(edge_ids)
+            release_frames(edge_ids)
         raise RuntimeError(
             f"dup_clusters: labels still changing after {max_iter} iterations "
             "(component diameter > 2^max_iter) — raise max_iter"

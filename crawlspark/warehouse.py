@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from crawlspark import functions as cf
 from crawlspark.fixtures import EPOCH
+from crawlspark.textops import release_frames
 
 WEBSITE_IDS = [("jora", 1), ("seek", 2), ("careerone", 3)]
 
@@ -253,46 +254,48 @@ def merge_round(
     # at 10^10 rows this is the difference between an O(delta) commit
     # and rewriting the whole table every round, docs/SCALE.md).
     # rows feed two actions (touched-bucket collection + the bucketed
-    # write) — persist so the parse/join/id chain runs once
-    from pyspark import StorageLevel
-
-    rows = rows.withColumn("_bucket", natural_key_bucket(n_buckets)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    touched = sorted(
-        r["_bucket"] for r in rows.select("_bucket").distinct().collect()
-    )
-    existing = None
-    if catalog.exists("job_metadata"):
-        if catalog.is_bucketed_as_of("job_metadata", rnd - 1):
-            # O(touched) read: ONLY the touched buckets' files are
-            # scanned (catalog-level dir pruning — a bucket filter on
-            # a full read would still scan every file)
-            existing = catalog.read_buckets("job_metadata", rnd - 1, touched)
-            if existing is not None:
-                existing = existing.withColumn(
-                    "_bucket", natural_key_bucket(n_buckets)
-                )
-        else:
-            # one-time migration from an unbucketed snapshot: full
-            # rewrite, every populated bucket is touched
-            existing = catalog.read_as_of_round("job_metadata", rnd - 1)
-            if existing is not None:
-                existing = existing.withColumn(
-                    "_bucket", natural_key_bucket(n_buckets)
-                )
-                touched = sorted(
-                    set(touched)
-                    | {
-                        r["_bucket"]
-                        for r in existing.select("_bucket").distinct().collect()
-                    }
-                )
-    merged = merge_job_metadata(existing, rows).drop("job_idx")
-    catalog.write_bucketed(
-        "job_metadata", merged, touched, round_no=rnd, base_round=rnd - 1
-    )
-    rows.unpersist()
+    # write): pin them with a lazy localCheckpoint so the parse/join/id
+    # chain runs once and the write plans against a LogicalRDD scan,
+    # not the round's whole upstream plan
+    rows = rows.withColumn(
+        "_bucket", natural_key_bucket(n_buckets)
+    ).localCheckpoint(eager=False)
+    try:
+        touched = sorted(
+            r["_bucket"] for r in rows.select("_bucket").distinct().collect()
+        )
+        existing = None
+        if catalog.exists("job_metadata"):
+            if catalog.is_bucketed_as_of("job_metadata", rnd - 1):
+                # O(touched) read: ONLY the touched buckets' files are
+                # scanned (catalog-level dir pruning — a bucket filter on
+                # a full read would still scan every file)
+                existing = catalog.read_buckets("job_metadata", rnd - 1, touched)
+                if existing is not None:
+                    existing = existing.withColumn(
+                        "_bucket", natural_key_bucket(n_buckets)
+                    )
+            else:
+                # one-time migration from an unbucketed snapshot: full
+                # rewrite, every populated bucket is touched
+                existing = catalog.read_as_of_round("job_metadata", rnd - 1)
+                if existing is not None:
+                    existing = existing.withColumn(
+                        "_bucket", natural_key_bucket(n_buckets)
+                    )
+                    touched = sorted(
+                        set(touched)
+                        | {
+                            r["_bucket"]
+                            for r in existing.select("_bucket").distinct().collect()
+                        }
+                    )
+        merged = merge_job_metadata(existing, rows).drop("job_idx")
+        catalog.write_bucketed(
+            "job_metadata", merged, touched, round_no=rnd, base_round=rnd - 1
+        )
+    finally:
+        release_frames(rows)
 
 
 # ---------------------------------------------------------------------------

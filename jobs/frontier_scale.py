@@ -88,6 +88,7 @@ def main() -> None:
     from crawlspark.bloom import build_bloom, dedup_against_seen, update_bloom
     from crawlspark.politeness import pop_per_host
     from crawlspark.session import get_spark
+    from crawlspark.textops import release_frames
 
     spark = get_spark(
         "frontier-scale", cores=args.cpus, shuffle_partitions=2 * args.cpus
@@ -161,8 +162,7 @@ def main() -> None:
     stages["pop"] = force(popped.filter(F.col("popped")))
     n_popped = popped.filter(F.col("popped")).count()
 
-    for df in owned:
-        df.unpersist()
+    release_frames(*owned, fresh, bloom)
 
     total = sum(stages.values())
     out = {

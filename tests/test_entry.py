@@ -94,11 +94,20 @@ def test_driver_query_persist_flat(spark):
 
     jsc = spark.sparkContext._jsc
 
-    def settled_size(deadline_s: float = 90.0, quiet_s: float = 5.0) -> int:
+    def settled_size(
+        target: int | None = None, deadline_s: float = 90.0, quiet_s: float = 5.0
+    ) -> int:
+        """Persisted-RDD count after GC stops dropping it (no drop for
+        ``quiet_s``, at most ``deadline_s``); with ``target``, returns as
+        soon as the count is at or below it."""
         best = jsc.getPersistentRDDs().size()
         deadline = _time.time() + deadline_s
         last_drop = _time.time()
-        while _time.time() < deadline and _time.time() - last_drop < quiet_s:
+        while (
+            (target is None or best > target)
+            and _time.time() < deadline
+            and _time.time() - last_drop < quiet_s
+        ):
             gc.collect()
             spark.sparkContext._jvm.System.gc()
             _time.sleep(1.0)
@@ -112,7 +121,7 @@ def test_driver_query_persist_flat(spark):
     steady = settled_size()
     for _ in range(2):
         q(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-    size = settled_size()
+    size = settled_size(target=steady)
     assert size <= steady, (
         f"corpus_pipeline leaks persisted intermediates: {steady} -> {size}"
     )

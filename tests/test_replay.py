@@ -142,8 +142,9 @@ def test_seen_warm_start(spark, tiny_pages):
 
 
 def test_persist_lifecycle_no_growth(spark, tiny_pages):
-    """Round-owned persists (bloom probe, pop branch point, robots
-    gate) must be released after each round: the persisted-RDD count
+    """Round-owned stage checkpoints (bloom probe, pop input, robots
+    gate, pop output, fetch, parse, merge rows) must be released after
+    each round: the persisted-RDD count
     after a multi-round run may exceed the pre-run count only by the
     engine's one long-lived cache (the chain-page slice)."""
     jsc = spark.sparkContext._jsc
@@ -151,3 +152,69 @@ def test_persist_lifecycle_no_growth(spark, tiny_pages):
     _engine(spark, tiny_pages, 600.0)
     after = jsc.getPersistentRDDs().size()
     assert after - before <= 1, f"persisted RDDs grew {before} -> {after}"
+
+
+# Spark jobs of the second tiny-fixture round (bloom probe active),
+# measured with every stage boundary a lazy localCheckpoint; nested
+# persists ran 62 here.
+ROUND_JOBS_MAX = 43
+
+
+def _new_engine(spark, cat, pages):
+    return CrawlEngine(
+        spark, cat, pages, gen_seeds("tiny"), politeness_rows(),
+        robots_rows(42, "tiny"), round_seconds=600.0,
+    )
+
+
+def test_round_job_count_pinned(spark, tiny_pages):
+    """A round runs at most ROUND_JOBS_MAX Spark jobs, counted through
+    the status tracker for the round's own job group: re-pinning a
+    stage with a persist (which re-plans every cached plan it nests)
+    or re-running a stage per branch fails here."""
+    sc = spark.sparkContext
+    eng = _new_engine(spark, SnapshotCatalog(tempfile.mkdtemp(), spark), tiny_pages)
+    eng.run_round(0)
+    group = "test-replay-round-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        eng.run_round(1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= ROUND_JOBS_MAX, f"round 1 ran {n_jobs} Spark jobs"
+
+
+def test_failed_commit_releases_round_frames(spark, tiny_pages, monkeypatch):
+    """A commit that raises leaks no round-owned frame, and resume
+    replays the failed round to the simulator's log. Round 0 commits
+    first so the engine's long-lived chain-page cache is already
+    materialized; after that the failed round may add no persisted RDD
+    (ids, not sizes: ContextCleaner may drop unrelated RDDs meanwhile)."""
+    cat = SnapshotCatalog(tempfile.mkdtemp(), spark)
+    eng = _new_engine(spark, cat, tiny_pages)
+    eng.run_round(0)
+    jsc = spark.sparkContext._jsc
+
+    class Boom(RuntimeError):
+        pass
+
+    orig_write = SnapshotCatalog.write
+
+    def failing_write(self, table, df, **kw):
+        if table == "frontier":
+            raise Boom()
+        return orig_write(self, table, df, **kw)
+
+    before = set(jsc.getPersistentRDDs().keySet())
+    monkeypatch.setattr(SnapshotCatalog, "write", failing_write)
+    with pytest.raises(Boom):
+        eng.run_round(1)
+    monkeypatch.undo()
+    leaked = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not leaked, f"failed round left persisted RDDs {sorted(leaked)}"
+
+    assert cat.last_committed_round("crawl_log") == 0
+    _new_engine(spark, cat, tiny_pages).run(N_ROUNDS, resume=True)
+    assert _engine_log(cat) == _sim_log(_sim(600.0))
